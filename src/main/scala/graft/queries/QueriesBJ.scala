@@ -82,6 +82,8 @@ object QueriesBJ extends QueryPack {
         // — one census job instead of two two-phase ScaleRank ntile
         // passes + a full join (~8 jobs). limit(gate+1) bounds driver
         // memory without a count job; past the gate, frames fallback.
+        // NULLs: a customer whose orders in a half all lack a price has
+        // a NULL rev there; ntile ranks it by rev DESC NULLS LAST, o_custkey.
         val gate = 2000000
         val rows = t(s, dir, "orders")
           .selectExpr("o_custkey",
@@ -96,8 +98,9 @@ object QueriesBJ extends QueryPack {
           // exact SQL ntile(10): first n % 10 buckets get one extra row
           def decileMap(half: Int): Map[Long, Long] = {
             val xs = rows.iterator.filter(_.getInt(1) == half)
-              .map(r => (r.getLong(0), r.getLong(2))).toArray
-            val sorted = xs.sortBy { case (cust, rev) => (-rev, cust) }
+              .map(r => (r.getLong(0), optLong(r, 2))).toArray
+            val sorted = xs.sortBy { case (cust, rev) => (rev, cust) }(
+              Ordering.Tuple2(nullsLast(Ordering[Long].reverse), Ordering[Long]))
             val n = sorted.length.toLong
             val size = n / 10; val rem = n % 10; val cut = rem * (size + 1)
             sorted.iterator.zipWithIndex.map { case ((cust, _), k) =>

@@ -57,6 +57,9 @@ object QueriesDU extends QueryPack {
         // ONE census job replaces cache + count + two cut subtrees + the
         // base×grid scan (~6 jobs). limit(gate+1) bounds driver memory
         // without a count job; past the gate, the frames below.
+        // NULLs: n counts every row; x sorts ASC NULLS LAST, so a cut
+        // that lands in the null tail is NULL, and x <= qx is never true
+        // for a NULL x or qx.
         val gate = 2000000
         val jointRows = base.groupBy("x", "y")
           .agg(count(lit(1)).cast("bigint").as("c"))
@@ -65,20 +68,23 @@ object QueriesDU extends QueryPack {
           val sc2 = s
           import sc2.implicits._
           val joint = jointRows.map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2)))
+            (optLong(r, 0), optLong(r, 1), r.getLong(2)))
           val n = joint.iterator.map(_._3).sum
-          def cut(census: Seq[(Long, Long)], qbp: Long): Long = {
+          def cut(census: Seq[(Option[Long], Long)], qbp: Long): Option[Long] = {
             var cum = 0L
             census.find { case (_, c) => cum += c; cum * 10000 >= n * qbp }
-              .map(_._1).getOrElse(0L)
+              .flatMap(_._1)
           }
-          val xc = joint.groupMapReduce(_._1)(_._3)(_ + _).toSeq.sortBy(_._1)
-          val yc = joint.groupMapReduce(_._2)(_._3)(_ + _).toSeq.sortBy(_._1)
+          val ord = nullsLast(Ordering[Long])
+          val xc = joint.groupMapReduce(_._1)(_._3)(_ + _).toSeq.sortBy(_._1)(ord)
+          val yc = joint.groupMapReduce(_._2)(_._3)(_ + _).toSeq.sortBy(_._1)(ord)
+          def le(a: Option[Long], b: Option[Long]) =
+            a.exists(x => b.exists(x <= _))
           val out = for (ubp <- Seq(2500L, 5000L, 7500L);
                          vbp <- Seq(2500L, 5000L, 7500L)) yield {
             val qx = cut(xc, ubp); val qy = cut(yc, vbp)
             val c = joint.iterator
-              .collect { case (x, y, cc) if x <= qx && y <= qy => cc }.sum
+              .collect { case (x, y, cc) if le(x, qx) && le(y, qy) => cc }.sum
             (ubp, vbp, c, c * 10000 / n, (ubp * vbp) / 10000,
               c * 10000 / n - (ubp * vbp) / 10000)
           }
@@ -92,7 +98,7 @@ object QueriesDU extends QueryPack {
         // this is the §5 aggwin class (1), not a row-rank: the earlier
         // two ScaleRank frames cost two checkpoint pins and benched
         // 3.3 s of job overhead at sf0.1
-        val wCum = org.apache.spark.sql.expressions.Window.orderBy("v")
+        val wCum = org.apache.spark.sql.expressions.Window.orderBy(col("v").asc_nulls_last)
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.currentRow)
         def cuts(cn: String, prefix: String) = base

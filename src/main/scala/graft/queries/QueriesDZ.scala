@@ -267,34 +267,45 @@ object QueriesDZ extends QueryPack {
         // census job replaces the ext agg + binned agg + ScaleRank
         // running-sum chain (~6 jobs). limit(gate+1) bounds driver
         // memory without a count job; past the gate, frames fallback.
+        // NULLs: n counts them, vmin/vmax skip them, and a NULL v lands
+        // in bin 63 (least() skips NULL in both engines); the exact side
+        // sorts v ASC NULLS LAST, so a rank in the null tail gives a NULL
+        // exact and err_bp.
         val gate = 2000000
         val censusRows = v.groupBy("v").agg(count(lit(1)).as("c"))
           .limit(gate + 1).collect()
         if (censusRows.length <= gate && censusRows.nonEmpty) {
           val sc2 = s
           import sc2.implicits._
-          val vc = censusRows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+          val vc = censusRows.map(r => (optLong(r, 0), r.getLong(1)))
+            .sortBy(_._1)(nullsLast(Ordering[Long]))
           val n = vc.iterator.map(_._2).sum
-          val vmin = vc.head._1; val vmax = vc.last._1
-          val span = vmax - vmin + 1
+          val vals = vc.flatMap(_._1)
+          val vmin = vals.headOption; val vmax = vals.lastOption
+          val span = for (hi <- vmax; lo <- vmin) yield hi - lo + 1
           // 64-bin sketch counts + cumulative, from the value census
           val binCnt = new Array[Long](64)
           vc.foreach { case (x, c) =>
-            binCnt(math.min(63L, (x - vmin) * 64 / span).toInt) += c }
+            val b = (for (xv <- x; lo <- vmin; sp <- span)
+              yield math.min(63L, (xv - lo) * 64 / sp)).getOrElse(63L)
+            binCnt(b.toInt) += c }
           val binCum = binCnt.scanLeft(0L)(_ + _).tail
           // exact side: running sum over the sorted value domain
           val qs = Seq(25L, 50L, 75L, 90L)
           val out = qs.map { q =>
             val r = (n * q + 99) / 100
             val b = binCum.indexWhere(_ >= r)
-            val lo = vmin + span * b / 64
-            val hi = vmin + span * (b + 1) / 64
             val cumB = binCum(b); val cntB = binCnt(b)
-            val est = lo + (hi - lo) * (r - (cumB - cntB) - 1) / cntB
+            val est = for (lo0 <- vmin; sp <- span) yield {
+              val lo = lo0 + sp * b / 64
+              val hi = lo0 + sp * (b + 1) / 64
+              lo + (hi - lo) * (r - (cumB - cntB) - 1) / cntB
+            }
             var cum = 0L
             val exact = vc.find { case (_, c) => cum += c; cum * 100 >= n * q }
-              .map(_._1).get
-            (q, n, est, exact, (est - exact).abs * 10000 / exact)
+              .flatMap(_._1)
+            val errBp = for (e <- est; x <- exact) yield (e - x).abs * 10000 / x
+            (q, n, est, exact, errBp)
           }
           out.toDF("q_pct", "n", "est", "exact", "err_bp")
         } else if (censusRows.isEmpty) {
@@ -332,7 +343,7 @@ object QueriesDZ extends QueryPack {
                  * (st.r - (st.cum - st.cnt) - 1) DIV st.cnt AS est""")
         // exact side: one shared cumsum over the DISTINCT-value domain
         val byV = v.groupBy("v").agg(count(lit(1)).as("c"))
-        val vcum = ScaleRank.withGlobalRunningSum(byV, Seq(col("v")),
+        val vcum = ScaleRank.withGlobalRunningSum(byV, Seq(col("v").asc_nulls_last),
           col("c"), "vc")
         val exact = qdf.crossJoin(
             vcum.crossJoin(broadcast(vcum.agg(max("vc").as("nn")))))

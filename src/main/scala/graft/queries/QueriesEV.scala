@@ -123,14 +123,15 @@ object QueriesEV extends QueryPack {
         // the crossJoin re-aggregation + the chosen broadcast subtree
         // (~4 jobs, stats computed twice). limit(gate+1) bounds driver
         // memory without a count job.
+        // NULLs: a NULL b100 (no price) is its own group at every node.
         val gate = 2000000
         val censusRows = fine.limit(gate + 1).collect()
         if (censusRows.length <= gate && censusRows.nonEmpty) {
           val rows = censusRows.map(r =>
-            (r.getLong(0), r.getLong(1), r.getLong(2))) // b100, d30, c
+            (optLong(r, 0), r.getLong(1), r.getLong(2))) // b100, d30, c
           val stats = nodeDefs.map { case (w, wf, g, gf) =>
-            val groups = rows.groupMapReduce(
-              r => (Math.floorDiv(r._1, wf), Math.floorDiv(r._2, gf)))(_._3)(_ + _)
+            val groups = rows.groupMapReduce(r =>
+              (r._1.map(Math.floorDiv(_, wf)), Math.floorDiv(r._2, gf)))(_._3)(_ + _)
             val total = groups.valuesIterator.sum
             val supp = groups.valuesIterator.filter(_ < 5).sum
             (w, g, groups.size.toLong, groups.valuesIterator.min,

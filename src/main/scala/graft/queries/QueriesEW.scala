@@ -52,15 +52,19 @@ object QueriesEW extends QueryPack {
         // prices|-bounded) — under the gate ONE census job replaces the
         // cache + count + 3 window passes + 4 crossJoin subtrees (~7
         // jobs). limit(gate+1) bounds driver memory without a count job.
+        // NULLs: v and boundary sort ASC NULLS LAST, a boundary or
+        // quantile in the null tail is NULL, and a NULL exact drops its
+        // row (WHERE exact > 0).
         val gate = 2000000
         val censusRows = census.limit(gate + 1).collect()
         if (censusRows.length <= gate) {
           val rows = censusRows.map(r => (r.getAs[Number](0).longValue,
-            r.getLong(1), r.getLong(2))) // nk (int in parquet), v, c
+            optLong(r, 1), r.getLong(2))) // nk (int in parquet), v, c
+          val ord = nullsLast(Ordering[Long])
           val n = rows.iterator.map(_._3).sum
           // per-nk equi-depth boundaries and masses (exact lag semantics)
           val sketch = rows.groupBy(_._1).iterator.flatMap { case (_, g) =>
-            val gs = g.sortBy(_._2)
+            val gs = g.sortBy(_._2)(ord)
             val nn = gs.iterator.map(_._3).sum
             val cums = gs.scanLeft(0L)((acc, r) => acc + r._3).tail
             var prevCum = 0L
@@ -74,25 +78,25 @@ object QueriesEW extends QueryPack {
             }
           }.toSeq
           val merged = sketch.groupMapReduce(_._1)(_._2)(_ + _)
-            .toSeq.sortBy(_._1)
+            .toSeq.sortBy(_._1)(ord)
           val mcum = merged.scanLeft(0L)((acc, bm) => acc + bm._2).tail
           // exact global census: sum per v across nations
-          val gc = rows.groupMapReduce(_._2)(_._3)(_ + _).toSeq.sortBy(_._1)
+          val gc = rows.groupMapReduce(_._2)(_._3)(_ + _).toSeq.sortBy(_._1)(ord)
           val gcum = gc.scanLeft(0L)((acc, vc) => acc + vc._2).tail
           val out = Seq(50L, 90L, 99L).flatMap { p =>
             val ei = mcum.indexWhere(cum => cum * 100 >= p * n)
             val xi = gcum.indexWhere(cum => cum * 100 >= p * n)
             if (ei < 0 || xi < 0) None else {
-              val est = merged(ei)._1; val exact = gc(xi)._1
-              if (exact > 0)
-                Some((p, est, exact, (est - exact).abs * 10000 / exact))
-              else None
+              val est = merged(ei)._1
+              gc(xi)._1.filter(_ > 0).map { exact =>
+                (p, est, exact, est.map(e => (e - exact).abs * 10000 / exact))
+              }
             }
           }
           out.toDF("p", "est", "exact", "err_bp")
         } else {
         census.cache(); census.count()
-        val wn = Window.partitionBy("nk").orderBy("v")
+        val wn = Window.partitionBy("nk").orderBy(col("v").asc_nulls_last)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val cum = census.withColumn("cum", sum("c").over(wn).cast("long"))
         val ntot = census.groupBy("nk").agg(sum("c").cast("long").as("nn"))
@@ -108,7 +112,7 @@ object QueriesEW extends QueryPack {
         // merge: boundary-mass union → global estimate
         val merged = sketch.groupBy("boundary")
           .agg(sum("mass").cast("long").as("m"))
-        val wg = Window.orderBy("boundary")
+        val wg = Window.orderBy(col("boundary").asc_nulls_last)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val mcum = merged.withColumn("cum", sum("m").over(wg).cast("long"))
         val gn = vals.agg(count(lit(1)).as("n"))
@@ -119,7 +123,7 @@ object QueriesEW extends QueryPack {
         // exact global quantiles from the full census
         val gcensus = vals.groupBy("v").agg(count(lit(1)).as("c"))
         val gcum = gcensus.withColumn("cum", sum("c").over(
-          Window.orderBy("v").rowsBetween(Window.unboundedPreceding,
+          Window.orderBy(col("v").asc_nulls_last).rowsBetween(Window.unboundedPreceding,
             Window.currentRow)).cast("long"))
         val exact = gcum.crossJoin(broadcast(gn)).crossJoin(broadcast(ps))
           .where(expr("cum * 100 >= p * n"))

@@ -301,6 +301,8 @@ object QueriesFB extends QueryPack {
         // HALF_UP on the shortest repr, cosine6Out's +0.0 signed-zero
         // normalization, NaN-greatest double ordering. Past the gate the
         // frames below are the 100 TB path (bucket-scoped IVF).
+        // NULLs: a NULL embedding has a NULL similarity to every vector;
+        // every ranking sorts similarity DESC NULLS LAST, then id ASC.
         val gate = 200000
         val rawRows = t(s, dir, "embeddings").select("vec_id", "embedding")
           .limit(gate + 1).collect()
@@ -310,26 +312,28 @@ object QueriesFB extends QueryPack {
           val n = rawRows.length
           val ids = Array.tabulate(n)(i => rawRows(i).getLong(0))
           val vecs = Array.tabulate(n)(i =>
-            rawRows(i).getSeq[Float](1).toArray)
+            if (rawRows(i).isNullAt(1)) None
+            else Some(rawRows(i).getSeq[Float](1).toArray))
           def dotD(a: Array[Float], b: Array[Float]): Double = {
             var acc = 0.0; var i = 0
             while (i < a.length && i < b.length) {
               acc += a(i).toDouble * b(i).toDouble; i += 1 }
             acc
           }
-          val nrm = Array.tabulate(n)(i => math.sqrt(dotD(vecs(i), vecs(i))))
+          val nrm = vecs.map(_.map(v => math.sqrt(dotD(v, v))))
           def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
             .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          def cos6out(i: Int, j: Int): Double =
-            round6(dotD(vecs(i), vecs(j)) / (nrm(i) * nrm(j))) + 0.0
-          val descAsc = Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long])
+          def sim6(i: Int, j: Int): Option[Double] =
+            for (a <- vecs(i); b <- vecs(j); na <- nrm(i); nb <- nrm(j))
+              yield round6(dotD(a, b) / (na * nb))
+          def cos6out(i: Int, j: Int): Option[Double] = sim6(i, j).map(_ + 0.0)
+          val descAsc = Ordering.Tuple2(nullsLast(Ordering[Double].reverse), Ordering[Long])
           val seedIdx = (0 until n).filter(i => ids(i) % SeedMod == 0)
           val queryIdx = (0 until n).filter(i => ids(i) < NQ)
           // assignment: best seed by (round6(cos) DESC, c_id ASC)
           val cellOf = Array.tabulate(n) { i =>
             if (seedIdx.isEmpty) -1L
-            else seedIdx.iterator.map(sj => (round6(dotD(vecs(i), vecs(sj)) /
-                (nrm(i) * nrm(sj))), ids(sj))).min(descAsc)._2
+            else seedIdx.iterator.map(sj => (sim6(i, sj), ids(sj))).min(descAsc)._2
           }
           // ground truth: top-K by (cos6out DESC, vec_id ASC), self excluded
           val gtSets = queryIdx.map { qi =>
@@ -341,8 +345,7 @@ object QueriesFB extends QueryPack {
             var hits = 0L
             queryIdx.foreach { qi =>
               val probeCells = seedIdx
-                .map(sj => (round6(dotD(vecs(qi), vecs(sj)) /
-                  (nrm(qi) * nrm(sj))), ids(sj)))
+                .map(sj => (sim6(qi, sj), ids(sj)))
                 .sorted(descAsc).take(np).map(_._2).toSet
               val found = (0 until n)
                 .filter(j => probeCells(cellOf(j)) && ids(j) != ids(qi))

@@ -48,4 +48,21 @@ object Q {
     java.time.LocalDateTime.parse(isoUtc.replace(' ', 'T'))
       .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000000L
   def millisOf(isoUtc: String): Long = nanosOf(isoUtc) / 1000000L
+
+  /** A nullable BIGINT cell of a collected census row: `Row.getLong`
+    * throws on NULL, so driver finishes decode attribute-derived cells
+    * through this. */
+  def optLong(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+  /** The oracle's NULL order for driver-side sorts: DuckDB puts NULLs
+    * last for ASC and DESC alike (pass `ord.reverse` for DESC). */
+  def nullsLast[T](ord: Ordering[T]): Ordering[Option[T]] =
+    new Ordering[Option[T]] {
+      def compare(a: Option[T], b: Option[T]): Int = (a, b) match {
+        case (Some(x), Some(y)) => ord.compare(x, y)
+        case (None, None) => 0
+        case (None, _) => 1
+        case (_, None) => -1
+      }
+    }
 }
