@@ -23,17 +23,39 @@ import org.apache.spark.sql.functions._
   *     z == zMax).
   * Count monotonicity (child ⊆ parent) makes the local parent condition
   * equivalent to "every ancestor was split".
+  *
+  * [[subdivideLastTs]] carries each leaf's newest timestamp through the
+  * same aggregation, for the harvest cycle's last-scan bookkeeping.
   */
 object GridOps {
 
   /** @return DataFrame(z: int, x: long, y: long, c: long) of leaf tiles. */
   def subdivide(points: DataFrame, lngCol: Column, latCol: Column,
-                z0: Int, zMax: Int, threshold: Long): DataFrame = {
+                z0: Int, zMax: Int, threshold: Long): DataFrame =
+    refine(points, lngCol, latCol, None, z0, zMax, threshold)
+
+  /** [[subdivide]] plus each leaf's newest point: `max(tsCol)` rides the
+    * same aggregation as the count, per deepest tile and then rolled up
+    * with `max` beside `sum(c)` (a zMax tile truncates to the same tile as
+    * its points at every level), so no second pass over the points.
+    * A leaf whose x or y is NULL gets a NULL `last_ts`, as an equi-join
+    * of the points to the leaves on (z, x, y) gives: NULL keys never match.
+    * @return DataFrame(z: int, x: long, y: long, c: long, last_ts). */
+  def subdivideLastTs(points: DataFrame, lngCol: Column, latCol: Column,
+                      tsCol: Column, z0: Int, zMax: Int,
+                      threshold: Long): DataFrame =
+    refine(points, lngCol, latCol, Some(tsCol), z0, zMax, threshold)
+
+  private def refine(points: DataFrame, lngCol: Column, latCol: Column,
+                     tsCol: Option[Column], z0: Int, zMax: Int,
+                     threshold: Long): DataFrame = {
     require(z0 >= 0 && zMax >= z0)
-    // one pass over the points: counts at the deepest zoom
+    val last = tsCol.map(_ => col("last_ts")).toSeq
+    // one pass over the points: counts (and newest ts) at the deepest zoom
     val deepest = points
-      .select(QuadKey.tileX(lngCol, zMax).as("x"), QuadKey.tileY(latCol, zMax).as("y"))
-      .groupBy("x", "y").agg(count(lit(1)).as("c"))
+      .select(Seq(QuadKey.tileX(lngCol, zMax).as("x"),
+        QuadKey.tileY(latCol, zMax).as("y")) ++ tsCol.map(_.as("last_ts")): _*)
+      .groupBy("x", "y").agg(count(lit(1)).as("c"), last.map(max(_).as("last_ts")): _*)
     // every level in ONE reaggregation of the deepest-zoom counts:
     // floor-halving composes, so truncating a zMax tile by (zMax - z)
     // bits IS the z-level tile of the same point. Explodes only the
@@ -41,11 +63,11 @@ object GridOps {
     // the exploded set is #tiles × #levels rows (tile counts, not
     // points), tiny at any data scale next to the point shuffle above.
     val tiles = deepest
-      .select(explode(sequence(lit(z0), lit(zMax))).as("z"),
-        col("x"), col("y"), col("c"))
-      .select(col("z"), expr(s"shiftright(x, $zMax - z)").as("x"),
-        expr(s"shiftright(y, $zMax - z)").as("y"), col("c"))
-      .groupBy("z", "x", "y").agg(sum("c").as("c"))
+      .select(Seq(explode(sequence(lit(z0), lit(zMax))).as("z"),
+        col("x"), col("y"), col("c")) ++ last: _*)
+      .select(Seq(col("z"), expr(s"shiftright(x, $zMax - z)").as("x"),
+        expr(s"shiftright(y, $zMax - z)").as("y"), col("c")) ++ last: _*)
+      .groupBy("z", "x", "y").agg(sum("c").as("c"), last.map(max(_).as("last_ts")): _*)
     // the parent's count is exactly the sum of its present children's
     // counts (every point of the parent lands in one child tile), so the
     // parent lookup is a sibling-sum WINDOW over the tile table — one
@@ -58,7 +80,8 @@ object GridOps {
         (col("z") === z0 && col("c") <= threshold) ||
           (col("z") > z0 && col("pc") > threshold &&
             (col("c") <= threshold || col("z") === zMax)))
-      .select(col("z").cast("int").as("z"), col("x"), col("y"), col("c"))
+      .select(Seq(col("z").cast("int").as("z"), col("x"), col("y"), col("c")) ++
+        last.map(when(col("x").isNotNull && col("y").isNotNull, _).as("last_ts")): _*)
   }
 
   /** Oracle SQL mirror: per-level tile counts straight from the points

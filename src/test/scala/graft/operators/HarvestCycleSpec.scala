@@ -1,17 +1,69 @@
 package graft.operators
 
+import java.nio.file.Files
 import graft.SparkSpec
-import graft.geo.SyntheticGeo
+import graft.geo.{QuadKey, SyntheticGeo}
+import graft.streaming.IdempotentSink
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** End-to-end harvest-cycle composition invariants on real testdata. */
 class HarvestCycleSpec extends SparkSpec {
   import spark.implicits._
 
+  private lazy val events = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
+
+  private lazy val pts = events
+    .select(SyntheticGeo.lng.as("lng"), SyntheticGeo.lat.as("lat"),
+      expr("ts DIV 1000000").as("ts_ms"))
+
+  /** The same points with about 1 ts in 5 and 1 lng in 7 set to NULL. */
+  private lazy val nulledPts = events
+    .select(
+      when(col("event_id") % 7 === 3, lit(null).cast("double"))
+        .otherwise(SyntheticGeo.lng).as("lng"),
+      SyntheticGeo.lat.as("lat"),
+      when(col("event_id") % 5 === 1, lit(null).cast("long"))
+        .otherwise(expr("ts DIV 1000000")).as("ts_ms"))
+
+  private def planOf(points: DataFrame): HarvestCycle.Plan =
+    HarvestCycle.plan(points, col("lng"), col("lat"), col("ts_ms"),
+      spark.range(0).select(col("id").as("tile_id")),
+      nowMs = 1706659200000L, batchSize = 7, limit = 40)
+
+  private def reportOf(p: HarvestCycle.Plan): Map[String, Long] =
+    p.report.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The grid as two passes over the points: the leaves from
+    * `GridOps.subdivide`, then every point's tile at each level equi-joined
+    * to the leaves for the newest `ts_ms`. */
+  private def twoPassGrid(points: DataFrame): DataFrame = {
+    val leaves = GridOps.subdivide(points, col("lng"), col("lat"), 3, 7, 200L)
+      .withColumn("tile_id", HarvestCycle.tileId(col("z"), col("x"), col("y")))
+    val ptTiles = points
+      .select(QuadKey.tileX(col("lng"), 7).as("px"),
+        QuadKey.tileY(col("lat"), 7).as("py"), col("ts_ms"))
+      .select(col("ts_ms"), explode(sequence(lit(3), lit(7))).as("z"),
+        col("px"), col("py"))
+      .select(col("ts_ms"), col("z"), expr("shiftright(px, 7 - z)").as("x"),
+        expr("shiftright(py, 7 - z)").as("y"))
+    val lastScan = ptTiles
+      .join(leaves.select("z", "x", "y"), Seq("z", "x", "y"))
+      .groupBy("z", "x", "y").agg(max("ts_ms").as("last_ts"))
+    leaves.join(lastScan, Seq("z", "x", "y"), "left")
+  }
+
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      want.schema.map(f => f.name -> f.dataType))
+    def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).groupBy(identity)
+      .map { case (r, rs) => r -> rs.size }
+    assert(rows(got) == rows(want))
+  }
+
   private lazy val plan: HarvestCycle.Plan = {
-    val pts = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
-      .select(SyntheticGeo.lng.as("lng"), SyntheticGeo.lat.as("lat"),
-        expr("ts DIV 1000000").as("ts_ms"))
     // two in-flight tiles: the first two leaves by id
     val leaves = GridOps.subdivide(pts, col("lng"), col("lat"), 3, 7, 200L)
       .withColumn("tile_id",
@@ -45,8 +97,52 @@ class HarvestCycleSpec extends SparkSpec {
   test("selection respects the limit and staleness ordering") {
     val tasks = plan.tasks.orderBy("batch_id", "tile_id").collect()
     assert(tasks.length <= 40)
-    val report = plan.report.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val report = reportOf(plan)
     assert(report("stale_selected") == tasks.length.toLong)
     assert(report("leaf_tiles") > 0 && report("points") > 0)
+  }
+
+  test("the one-pass grid equals the two-pass composition, row for row") {
+    val p = planOf(pts)
+    assertSameRows(p.grids, twoPassGrid(pts))
+    val report = reportOf(p)
+    assert(report("points") == pts.count())
+    assert(report("leaf_tiles") == p.grids.count())
+  }
+
+  test("NULL timestamps are skipped; a leaf with NULL coordinates has no last scan") {
+    assert(nulledPts.filter(col("ts_ms").isNull).count() > 0)
+    val p = planOf(nulledPts)
+    assertSameRows(p.grids, twoPassGrid(nulledPts))
+    val nullLeaves = p.grids.filter(col("x").isNull).collect()
+    assert(nullLeaves.nonEmpty)
+    assert(nullLeaves.forall(_.isNullAt(5)))
+    assert(p.grids.filter(col("x").isNotNull && col("last_ts").isNull).count() == 0)
+    val report = reportOf(p)
+    assert(report("points") == nulledPts.count())
+  }
+
+  test("the returned grid and tasks re-read no file") {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    for (df <- Seq(plan.grids, plan.tasks, plan.grids.groupBy("z").count())) {
+      df.collect()
+      val scans = nodes(df.queryExecution.executedPlan).collect {
+        case f: FileSourceScanExec => f
+      }
+      assert(scans.isEmpty, df.queryExecution.executedPlan.treeString)
+    }
+  }
+
+  test("a committed task batch is one parquet file") {
+    val root = Files.createTempDirectory("harvest-sink").toString
+    assert(plan.tasks.count() > 1)
+    assert(IdempotentSink.writeBatch(root)(plan.tasks, 0L))
+    val parts = new java.io.File(s"$root/batch=0").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(parts.length == 1)
   }
 }
