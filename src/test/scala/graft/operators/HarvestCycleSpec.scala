@@ -4,6 +4,8 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.geo.{QuadKey, SyntheticGeo}
 import graft.streaming.IdempotentSink
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -25,6 +27,16 @@ class HarvestCycleSpec extends SparkSpec {
       when(col("event_id") % 7 === 3, lit(null).cast("double"))
         .otherwise(SyntheticGeo.lng).as("lng"),
       SyntheticGeo.lat.as("lat"),
+      when(col("event_id") % 5 === 1, lit(null).cast("long"))
+        .otherwise(expr("ts DIV 1000000")).as("ts_ms"))
+
+  /** `nulledPts` with about 1 lat in 11 set to NULL as well. */
+  private lazy val nulledLatPts = events
+    .select(
+      when(col("event_id") % 7 === 3, lit(null).cast("double"))
+        .otherwise(SyntheticGeo.lng).as("lng"),
+      when(col("event_id") % 11 === 4, lit(null).cast("double"))
+        .otherwise(SyntheticGeo.lat).as("lat"),
       when(col("event_id") % 5 === 1, lit(null).cast("long"))
         .otherwise(expr("ts DIV 1000000")).as("ts_ms"))
 
@@ -144,5 +156,64 @@ class HarvestCycleSpec extends SparkSpec {
     val parts = new java.io.File(s"$root/batch=0").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(parts.length == 1)
+  }
+
+  test("the driver finish and the distributed path return the same plan") {
+    val (tMin, tMax) = {
+      val r = pts.agg(min("ts_ms"), max("ts_ms")).head
+      (r.getLong(0), r.getLong(1))
+    }
+    def same(points: DataFrame, zMax: Int, threshold: Long, limit: Int): Map[String, Long] = {
+      // a NULL id, a few real leaf ids and an id that is no leaf
+      val leafIds = GridOps.subdivide(points, col("lng"), col("lat"), 3, zMax, threshold)
+        .select(HarvestCycle.tileId(col("z"), col("x"), col("y")).as("tile_id"))
+        .filter(col("tile_id").isNotNull).orderBy("tile_id").limit(3)
+        .as[Long].collect().toSeq
+      val inflight = (Seq[java.lang.Long](null, 12345L) ++ leafIds.map(Long.box))
+        .toDF("tile_id")
+      // the cutoff falls inside the points' time range: some leaves are stale
+      val nowMs = (tMin + tMax) / 2
+      val local = HarvestCycle.planOnDriver(points, col("lng"), col("lat"),
+        col("ts_ms"), inflight, nowMs, 3, zMax, threshold, 0L, 7, limit, 3600000L)
+      val dist = HarvestCycle.planDistributed(points, col("lng"), col("lat"),
+        col("ts_ms"), inflight, nowMs, 3, zMax, threshold, 0L, 7, limit, 3600000L)
+      val what = s"zMax $zMax, threshold $threshold, limit $limit"
+      assertSameRows(local.grids, dist.grids)
+      assert(local.tasks.schema.map(f => f.name -> f.dataType) ==
+        dist.tasks.schema.map(f => f.name -> f.dataType), what)
+      assert(local.tasks.collect().toSeq == dist.tasks.collect().toSeq, what)
+      assert(reportOf(local) == reportOf(dist), what)
+      reportOf(dist)
+    }
+    for (zMax <- Seq(7, 9); points <- Seq(pts, nulledLatPts)) {
+      // every stale leaf fits in the limit
+      val all = same(points, zMax, 200L, limit = 1000000)
+      assert(all("stale_selected") > 0 && all("stale_selected") < all("leaf_tiles"))
+      // the grid splits down to zMax and the limit cuts the selection
+      val deep = same(points, zMax, 5L, limit = 40)
+      assert(deep("leaf_tiles") > all("leaf_tiles") && deep("stale_selected") == 40)
+    }
+    assert(nulledLatPts.filter(col("lat").isNull).count() > 0)
+    for (zMax <- Seq(7, 9))
+      assert(same(pts.limit(0), zMax, 200L, limit = 40)("leaf_tiles") == 0)
+  }
+
+  test("one plan call at the default zoom starts at most 3 Spark jobs") {
+    val root = Files.createTempDirectory("harvest-inflight").toString
+    IdempotentSink.writeBatch(root)(plan.tasks, 0L)
+    val inflight = IdempotentSink.readCommitted(spark, root).select("tile_id")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      HarvestCycle.plan(pts, col("lng"), col("lat"), col("ts_ms"), inflight,
+        1706659200000L, batchSize = 7, limit = 40)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    info(s"${jobs.get} jobs")
+    assert(jobs.get <= 3)
   }
 }
