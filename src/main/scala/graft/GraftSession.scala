@@ -10,8 +10,26 @@ import org.apache.spark.sql.SparkSession
   *    partition counts when data volume moves 100×.
   *  - Partial aggregation, broadcast thresholds and parquet pushdown are
   *    Spark defaults we *rely* on; tests assert they stay on.
+  *  - Code-generation cache: Spark keeps the classes it generates in one
+  *    JVM-wide LRU cache of 100 entries by default, fewer than a repeated
+  *    cycle of analyst queries needs; see `codegenCacheEntries`. (Parquet
+  *    schemas are cached by `Tables`.)
   */
 object GraftSession {
+  /** Entries of Spark's code-generation cache. Measured (4 cores, sf0.1):
+    * a round of the six analyst benchmark queries compiles 136-140
+    * distinct classes, so at 100 entries every repeated round compiled
+    * 87-95 of them again and ran them interpreted; at 150-1,000 a
+    * repeated round compiled 0 (now and then 4, from a changed plan), and
+    * the warm round went from 5.5 s to 3.9 s. 500 leaves room for a
+    * cycle three times the sample. An entry holds the generated source
+    * text and its loaded class: after an analyst round heap (170 MB) and
+    * metaspace (170 MB) in use were the same at 100 and 500 entries;
+    * after a 150-query sweep (2,200-3,100 compiles) heap was 215-218 MB
+    * at 100 entries and 242-316 MB at 300-1,000, metaspace 204-209 MB at
+    * every size. */
+  val codegenCacheEntries = 500
+
   def builder(appName: String = "graft"): SparkSession.Builder = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession
@@ -41,6 +59,9 @@ object GraftSession {
       // integer arithmetic (`ts DIV 1000000` == DuckDB `epoch_ms(ts)`).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
+      // Static: read once per JVM, when the first session creates
+      // Spark's code generator, so the first session's value holds.
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
   }

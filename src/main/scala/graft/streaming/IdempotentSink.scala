@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
@@ -76,10 +77,14 @@ object IdempotentSink {
     else hfs.listStatus(dir).toSeq.map(_.getPath.getName.toLong).sorted
   }
 
-  /** Read the committed prefix of the sink as one DataFrame. */
+  /** Read the committed prefix of the sink as one DataFrame. The schema
+    * is the first committed batch's, the file Spark would infer it from:
+    * a committed batch never changes, so `Tables.schemaOf` infers it once
+    * per session instead of one footer job per read. */
   def readCommitted(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
     val ids = committedBatches(spark, root)
     require(ids.nonEmpty, s"no committed batches under $root")
-    spark.read.parquet(ids.map(id => s"$root/batch=$id"): _*)
+    val dirs = ids.map(id => s"$root/batch=$id")
+    spark.read.schema(Tables.schemaOf(spark, dirs.head)).parquet(dirs: _*)
   }
 }

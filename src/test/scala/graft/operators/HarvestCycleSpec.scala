@@ -4,8 +4,6 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.geo.{QuadKey, SyntheticGeo}
 import graft.streaming.IdempotentSink
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -202,18 +200,11 @@ class HarvestCycleSpec extends SparkSpec {
     val root = Files.createTempDirectory("harvest-inflight").toString
     IdempotentSink.writeBatch(root)(plan.tasks, 0L)
     val inflight = IdempotentSink.readCommitted(spark, root).select("tile_id")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsStarted {
       HarvestCycle.plan(pts, col("lng"), col("lat"), col("ts_ms"), inflight,
         1706659200000L, batchSize = 7, limit = 40)
-      ListenerBusDrain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    info(s"${jobs.get} jobs")
-    assert(jobs.get <= 3)
+    }
+    info(s"$jobs jobs")
+    assert(jobs <= 3)
   }
 }

@@ -28,6 +28,18 @@ class IdempotentSinkSpec extends SparkSpec {
     assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c")))
   }
 
+  test("readCommitted starts no Spark job once the sink's schema is known") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("idempotent-schema").toString
+    IdempotentSink.writeBatch(root)(Seq((1L, "a")).toDF("id", "v"), 0L)
+    assert(IdempotentSink.readCommitted(spark, root).columns.toSeq == Seq("id", "v"))
+    IdempotentSink.writeBatch(root)(Seq((2L, "b")).toDF("id", "v"), 1L)
+    assert(jobsStarted(IdempotentSink.readCommitted(spark, root)) == 0)
+    assert(IdempotentSink.readCommitted(spark, root).as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+  }
+
   test("foreachBatch + IdempotentSink survives a stream restart without duplicates") {
     val s = spark
     import s.implicits._
